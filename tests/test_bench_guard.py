@@ -141,31 +141,45 @@ def test_floor_regen_ignores_dirty_working_tree(tmp_path):
     the floors were last regenerated. The generator must fold committed
     git generations only, so a dirtied working tree cannot change the
     regen output."""
-    # Minimal fixture repo: one committed generation, then a dirty
-    # working-tree copy with a strictly lower reading.
-    fixture = tmp_path / "repo"
-    fixture.mkdir()
-
-    def _git(*args):
-        subprocess.run(
-            ["git", "-c", "user.email=t@t", "-c", "user.name=t", *args],
-            cwd=fixture,
-            capture_output=True,
-            text=True,
-            check=True,
-        )
-
-    _git("init", "-q")
-    (fixture / "BENCH_r03.json").write_text(json.dumps({"parsed": {}}))
-    committed = {"sf": 0.1, "queries": {"q1": 1.0, "q2": 2.0}}
-    (fixture / "BENCH_DETAIL.json").write_text(json.dumps(committed))
-    _git("add", "-A")
-    _git("commit", "-q", "-m", "gen1")
+    # One committed generation, then a dirty working-tree copy with a
+    # strictly lower reading.
+    fixture = _floor_fixture(tmp_path)
     # Driver race: working tree now holds a NEW minimum nobody committed.
     (fixture / "BENCH_DETAIL.json").write_text(
         json.dumps({"sf": 0.1, "queries": {"q1": 0.5, "q2": 2.0}})
     )
 
+    floors = _regen_floors(tmp_path, fixture)
+    # q1's floor is the COMMITTED 1.0, not the dirty working-tree 0.5.
+    assert floors["q1"] == 1.0
+    assert floors["q2"] == 2.0
+
+
+def _git(repo, *args) -> str:
+    return subprocess.run(
+        ["git", "-c", "user.email=t@t", "-c", "user.name=t", *args],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+
+
+def _floor_fixture(tmp_path):
+    """Minimal fixture repo holding one committed generation."""
+    fixture = tmp_path / "repo"
+    fixture.mkdir()
+    _git(fixture, "init", "-q")
+    (fixture / "BENCH_r03.json").write_text(json.dumps({"parsed": {}}))
+    committed = {"sf": 0.1, "queries": {"q1": 1.0, "q2": 2.0}}
+    (fixture / "BENCH_DETAIL.json").write_text(json.dumps(committed))
+    _git(fixture, "add", "-A")
+    _git(fixture, "commit", "-q", "-m", "gen1")
+    return fixture
+
+
+def _regen_floors(tmp_path, fixture) -> dict:
+    """Run tools/bench_floor.py against FIXTURE; return its floors."""
     src = open(os.path.join(REPO, "tools", "bench_floor.py")).read()
     src = src.replace(
         "REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))",
@@ -180,7 +194,31 @@ def test_floor_regen_ignores_dirty_working_tree(tmp_path):
         text=True,
     )
     assert proc.returncode == 0, proc.stderr
-    floors = json.load(open(out))["floors"]
-    # q1's floor is the COMMITTED 1.0, not the dirty working-tree 0.5.
+    return json.load(open(out))["floors"]
+
+
+def test_floor_regen_ignores_refs_outside_head(tmp_path):
+    """Floors are a function of the checked-out commit only: a stashed
+    working-tree bench (a stash is a commit under refs/stash) and a
+    generation committed on a branch HEAD does not contain must not
+    lower any floor."""
+    fixture = _floor_fixture(tmp_path)
+    # A dirty working-tree reading, put away with `git stash`.
+    (fixture / "BENCH_DETAIL.json").write_text(
+        json.dumps({"sf": 0.1, "queries": {"q1": 0.5, "q2": 2.0}})
+    )
+    _git(fixture, "stash", "-q")
+    # A lower generation committed on a side branch, then left.
+    _git(fixture, "checkout", "-q", "-b", "side")
+    (fixture / "BENCH_DETAIL.json").write_text(
+        json.dumps({"sf": 0.1, "queries": {"q1": 1.0, "q2": 0.25}})
+    )
+    _git(fixture, "commit", "-q", "-am", "side gen")
+    _git(fixture, "checkout", "-q", "-")
+    # Both lower readings are reachable from some ref, not from HEAD.
+    assert _git(fixture, "stash", "list").strip()
+    assert "side gen" in _git(fixture, "log", "--all", "--format=%s")
+
+    floors = _regen_floors(tmp_path, fixture)
     assert floors["q1"] == 1.0
     assert floors["q2"] == 2.0

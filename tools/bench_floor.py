@@ -13,6 +13,11 @@ checkout (rounds 8 and 9) through no fault of the committed floors.
 Uncommitted readings become floor inputs the moment they are committed
 — which the round-start artifact absorption always does.
 
+Only HEAD's own history is walked (not `git log --all`), so the floors
+are a function of the checked-out commit alone: a `git stash` of a
+dirty working-tree bench, or a generation committed on a branch HEAD
+does not contain, is not an input.
+
 Usage:
     python tools/bench_floor.py          # writes BENCH_FLOOR.json
     python tools/bench_floor.py PATH     # writes PATH (read-only checks)
@@ -106,7 +111,7 @@ def _generations() -> list[dict[str, float]]:
         gens.append(parsed["queries"])
     for fname in ("BENCH_DETAIL.json", "BENCH_FULL.json"):
         hashes = subprocess.run(
-            ["git", "log", "--all", "--format=%H", "--", fname],
+            ["git", "log", "--format=%H", "HEAD", "--", fname],
             cwd=REPO,
             capture_output=True,
             text=True,
