@@ -335,11 +335,6 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(target) if n < target else df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every warehouse table; keyed by table name."""
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all tables as temp views so ``spark.sql`` queries work.
 

@@ -227,15 +227,21 @@ def decode_features(blobs: DataFrame) -> DataFrame:
     pandas materialization, and an Arrow binary column is one contiguous
     data buffer plus an offsets array — so the fake-codec path (every
     non-BMP/PPM blob) vectorizes completely: per-row byte sums come from
-    one int64 cumsum over the shared data buffer sliced at the offsets,
-    and width/height/frames are numpy modular arithmetic on the lengths.
+    one int64 cumsum over the batch's own byte window of the data buffer
+    (``[offsets[0], offsets[-1]]``, so a sliced batch neither scans nor
+    allocates for bytes outside it), and width/height/frames are numpy
+    modular arithmetic on the lengths.
     Results are byte-identical to the row loop: the sums are exact
     integers and mean = int64/int64 is the same IEEE division
-    ``_fake_decode`` performs (fuzz-pinned by
+    ``_fake_decode`` performs (fuzz-pinned, including sliced and
+    ``large_binary`` batches, by
     tests/test_multimodal_codecs.py::test_arrow_decoder_matches_row_functions).
     Rows that sniff as real containers (``BM``/``P6`` magic) still route
     through the unchanged strict parsers — the per-row cost that matters
     only on actual media rows.
+    A NULL blob (the Arrow validity bit is unset) decodes to NULL in
+    every feature column and keeps its doc_id — a missing blob has no
+    size, dimensions or mean, and must not pass as an empty one.
     Input: columns (doc_id: long, blob: binary); output: DECODE_SCHEMA.
     """
 
@@ -253,11 +259,19 @@ def decode_features(blobs: DataFrame) -> DataFrame:
             offs = np.frombuffer(arr.buffers()[1], dtype=off_dt)[
                 arr.offset : arr.offset + n + 1
             ].astype(np.int64)
+            # Rebase onto this batch's byte window of the shared buffer.
+            lo, hi = int(offs[0]), int(offs[-1])
+            offs -= lo
             dbuf = arr.buffers()[2]
             data = (
-                np.frombuffer(dbuf, dtype=np.uint8)
-                if dbuf is not None
+                np.frombuffer(dbuf, dtype=np.uint8, count=hi - lo, offset=lo)
+                if dbuf is not None and hi > lo
                 else np.zeros(0, dtype=np.uint8)
+            )
+            null = (
+                arr.is_null().to_numpy(zero_copy_only=False)
+                if arr.null_count
+                else None
             )
             lens = offs[1:] - offs[:-1]
             cs = np.zeros(len(data) + 1, dtype=np.int64)
@@ -271,6 +285,8 @@ def decode_features(blobs: DataFrame) -> DataFrame:
             # strict row parse; failed parses keep the fake values the
             # vector pass already produced (== _decode_blob's fallback).
             has2 = lens >= 2
+            if null is not None:
+                has2 &= ~null
             b0 = np.zeros(n, dtype=np.uint8)
             b1 = np.zeros(n, dtype=np.uint8)
             idx0 = offs[:-1][has2]
@@ -289,11 +305,11 @@ def decode_features(blobs: DataFrame) -> DataFrame:
             yield pa.RecordBatch.from_arrays(
                 [
                     ids,
-                    pa.array(width, type=pa.int32()),
-                    pa.array(height, type=pa.int32()),
-                    pa.array(lens, type=pa.int64()),
-                    pa.array(mean, type=pa.float64()),
-                    pa.array(frames, type=pa.int32()),
+                    pa.array(width, type=pa.int32(), mask=null),
+                    pa.array(height, type=pa.int32(), mask=null),
+                    pa.array(lens, type=pa.int64(), mask=null),
+                    pa.array(mean, type=pa.float64(), mask=null),
+                    pa.array(frames, type=pa.int32(), mask=null),
                 ],
                 names=[
                     "doc_id",

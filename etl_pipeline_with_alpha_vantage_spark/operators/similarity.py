@@ -2260,9 +2260,9 @@ def _pca_gram_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact integer Gram matrix of the embedding corpus as a
     (gi, gj, g) table: per-row HALF_UP micro-rounded outer products
     accumulated into int64 per-partition partials by a numpy
-    mapInPandas kernel (d² rows emitted per task), merged by one tiny
-    keyed aggregation, checkpointed, memoized per (session, sf_dir) —
-    ON the session object (catalog._session_cache), so a stopped
+    mapInPandas kernel (d² rows emitted per non-empty task), merged by
+    one tiny keyed aggregation, checkpointed, memoized per (session,
+    sf_dir) — ON the session object (catalog._session_cache), so a stopped
     session's checkpointed blocks are collectable; a module-level dict
     keyed by session_ident pinned them for the process lifetime."""
     from ..catalog import _session_cache, derived_memo_key  # noqa: PLC0415
@@ -2290,7 +2290,11 @@ def pca_gram_from(emb: DataFrame) -> DataFrame:
 
         half_away = _np_half_away
         acc = np.zeros((d, d), dtype=np.int64)
+        seen = False
         for pdf in batches:
+            if pdf.empty:
+                continue
+            seen = True
             x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             # einsum materializes per-row outer products so rounding
             # happens per ROW (exactness requires it: rounding does not
@@ -2300,6 +2304,11 @@ def pca_gram_from(emb: DataFrame) -> DataFrame:
                 xc = x[lo : lo + 1024]
                 p = np.einsum("ni,nj->nij", xc, xc) * 1_000_000.0
                 acc += half_away(p).astype(np.int64).sum(axis=0)
+        if not seen:
+            # An empty partition adds nothing to the Gram; an empty
+            # corpus therefore has no Gram cells and no loadings, as in
+            # the oracle (a zero grid would give d NULL loadings).
+            return
         gi, gj = np.meshgrid(np.arange(d), np.arange(d), indexing="ij")
         yield pd.DataFrame(
             {
@@ -2320,47 +2329,60 @@ def pca_gram_from(emb: DataFrame) -> DataFrame:
 def pca_power_sweeps(
     spark: SparkSession, cells: DataFrame, iters: int = _PCA_ITERS
 ) -> DataFrame:
-    """The power-iteration core over any (gi, gj, g) integer Gram table:
-    iters × [broadcast 64-entry vector ⋈ Gram → micro-pinned mat-vec →
-    exact-integer-norm² normalization via a bounded global window].
-    Returns (idx, v). Numpy-replay-proven at 1M one-hot vectors by
+    """The power-iteration core over a dense d×d (gi, gj, g) integer Gram
+    table, or an empty one: returns (idx, v), d rows, or none for an
+    empty Gram.
+
+    One stage chain, whatever ``iters`` is: a keyed and then a global
+    aggregate gather the Gram into one row of d sorted bigint rows
+    (O(d²) longs at any corpus size), one ``aggregate`` over
+    ``iters`` steps runs every sweep on that row, and a posexplode
+    returns the vector as rows. A sweep is the recurrence the DuckDB
+    oracle chains as CTEs, element for element: u_i = Σ_j
+    CAST(round(g_ij · v_j) AS BIGINT) summed as integers, d_i = u_i / 1e6,
+    n² = Σ_i CAST(round(d_i² · 1e6) AS BIGINT), v_i = d_i / sqrt(n² / 1e6).
+    Integer sums do not depend on order, so this is bit-identical to the
+    oracle's join-and-SUM. NULLs propagate the same way: a zero n²
+    makes every v_i NULL (x/0 is NULL with ANSI off), and from then on
+    every term is NULL, which SUM and the ``+`` fold both map to NULL.
+
+    The un-normalized vector and its norm² are each bound once per sweep
+    through a singleton array (``element_at(transform(array(x), ...), 1)``)
+    rather than repeated in the expression. The start vector is cast to
+    ARRAY<DOUBLE> so its elements are nullable: ``array_repeat`` alone
+    yields containsNull=false, and the sweep lambda would then read a
+    NULL loading as 0.0. Numpy-replay-proven at 1M one-hot vectors by
     tests/test_scale_smoke.py (the Gram there is exactly diagonal, its
     closed form asserted cell-by-cell)."""
     d = _PCA_D
-    v = spark.range(d).select(
-        F.col("id").cast("long").alias("idx"),
-        F.lit(1.0 / (d ** 0.5)).alias("v"),
+    gram = (
+        cells.groupBy("gi")
+        .agg(F.sort_array(F.collect_list(F.struct("gj", "g"))).alias("r"))
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct("gi", F.col("r.g").alias("g")))
+            ).alias("gram")
+        )
     )
-    for _ in range(iters):
-        u = (
-            cells.join(
-                F.broadcast(v.withColumnRenamed("idx", "gj")), "gj"  # bounded: d-row eigenvector (PCA dim)
-            )
-            .groupBy("gi")
-            .agg(
-                F.sum(F.expr("CAST(round(g * v) AS BIGINT)"))
-                .cast("long")
-                .alias("u")
-            )
-            .select(F.col("gi").alias("idx"), (F.col("u") / 1e6).alias("d"))
-        )
-        # Normalization via a global window over the 64-row vector table
-        # (documented-bounded, like every post-aggregation dust window)
-        # instead of an agg + crossJoin — one broadcast exchange fewer
-        # per sweep, same exact integer norm².
-        wall = Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        v = u.withColumn(
-            "n2",
-            F.sum(F.expr("CAST(round(d * d * 1000000) AS BIGINT)"))
-            .over(wall)
-            .cast("long"),
-        ).select(
-            "idx",
-            (F.col("d") / F.sqrt(F.col("n2") / F.lit(1000000.0))).alias("v"),
-        )
-    return v
+    mat_vec = (
+        "transform(gram, r -> aggregate("
+        "zip_with(r.g, v, (g, x) -> CAST(round(g * x) AS BIGINT)), "
+        "CAST(0 AS BIGINT), (s, t) -> s + t) / 1000000.0D)"
+    )
+    norm2 = (
+        "aggregate(dv, CAST(0 AS BIGINT), "
+        "(s, x) -> s + CAST(round(x * x * 1000000) AS BIGINT))"
+    )
+    sweep = (
+        f"element_at(transform(array({mat_vec}), dv -> "
+        f"element_at(transform(array({norm2}), n2 -> "
+        "transform(dv, x -> x / sqrt(n2 / 1000000.0D))), 1)), 1)"
+    )
+    v0 = f"CAST(array_repeat({1.0 / d ** 0.5!r}D, {d}) AS ARRAY<DOUBLE>)"
+    sweeps = f"aggregate(array_repeat(0, {iters}), {v0}, (v, k) -> {sweep})"
+    return gram.select(F.posexplode(F.expr(sweeps))).select(
+        F.col("pos").cast("long").alias("idx"), F.col("col").alias("v")
+    )
 
 
 @query("embedding_pca_power", oracle=_pca_oracle())
@@ -2373,14 +2395,15 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONCE through a mapInPandas numpy kernel that accumulates each Arrow
     batch's outer products into a per-partition integer partial Gram —
     dense BLAS work where vectorized math wins (the module's stated
-    UDF policy), emitting exactly d² = {d2} rows per task so the single
-    exchange carries O(tasks · d²), never O(n); (2) {iters}
-    power-iteration sweeps run on the d²-row Gram table — per-sweep
-    cost is a broadcast of the 64-entry vector and a tiny aggregation,
-    the ml_logistic_gd iteration economics. The Gram table is
-    localCheckpoint'd and session-memoized (the graph-fixture
-    discipline) so sweeps and repeated calls reuse one materialization
-    instead of re-scanning the corpus.
+    UDF policy), emitting exactly d² = {d2} rows per non-empty task so
+    the single exchange carries O(tasks · d²), never O(n); the Gram
+    table is localCheckpoint'd and session-memoized (the graph-fixture
+    discipline) so repeated calls reuse one materialization instead of
+    re-scanning the corpus. (2) The Gram is gathered into a single row
+    of d sorted bigint rows ({d2} longs at any corpus size) and all
+    {iters} power-iteration sweeps run inside one ``aggregate``
+    expression on that row, then posexplode back to rows — one short
+    stage chain whatever the sweep count (see pca_power_sweeps).
 
     Exactness: each row's outer-product cell is HALF_UP-rounded to
     integer micro-units IN the kernel (explicitly, not np.rint's
@@ -2392,7 +2415,8 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration count and a fixed start vector (uniform 1/√d) make the
     recurrence a definition, not a convergence hope; the dominant
     eigengap of this corpus makes 6 sweeps plenty (loadings move
-    < 1e-4 by sweep 6).
+    < 1e-4 by sweep 6). An empty corpus has no Gram cells and returns
+    no rows, as the oracle does.
     """
     cells = _pca_gram_cells(spark, sf_dir)
     v = pca_power_sweeps(spark, cells)

@@ -201,14 +201,6 @@ def _try_publish(path: str, manifest: dict) -> bool:
         os.unlink(tmp)
 
 
-def _write_manifest(path: str, manifest: dict) -> None:
-    if not _try_publish(path, manifest):
-        raise SnapshotConflictError(
-            f"version {manifest['version']} at {path} was committed by a "
-            "concurrent writer"
-        )
-
-
 def snapshot_commit(
     spark: SparkSession,
     path: str,

@@ -97,9 +97,14 @@ def read_events_stream(
 def dedup_hourly_counts(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """X19: watermark → exactly-once dedup on event_id → hourly counts.
 
-    The watermark bounds both the dedup state and the window state: keys
-    older than (max event time − watermark) are dropped from state, which
-    is what makes this runnable forever on an unbounded stream.
+    The watermark bounds only the window state: hourly windows that end
+    before (max event time − watermark) are finalized and dropped. It
+    does NOT bound the dedup state: ``dropDuplicates(["event_id"])`` has
+    no event-time column among its keys, so Spark can never evict a
+    seen id, and that state grows with every distinct event_id for the
+    life of the checkpoint. Bounding it means
+    ``dropDuplicatesWithinWatermark`` or the event time among the keys —
+    both change which late re-sends are dropped.
     """
     return (
         stream.withWatermark("ts", watermark)

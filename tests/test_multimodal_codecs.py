@@ -95,8 +95,12 @@ def test_arrow_decoder_matches_row_functions():
     """The r13 mapInArrow migration must be BYTE-exact against the row
     functions for every dispatch path: fake (arbitrary bytes), empty
     blob, valid BMP/PPM, near-miss magic, truncated BMP. Runs the
-    extract generator directly on a hand-built Arrow batch (no Spark
-    session needed) over a deterministic fuzz corpus."""
+    extract generator directly on hand-built Arrow batches (no Spark
+    session needed) over a deterministic fuzz corpus, in every buffer
+    layout the decoder reads: int32 offsets, int64 offsets
+    (``large_binary``), a sliced batch (non-zero array offset, offsets
+    that do not start at 0), and NULL blobs, which decode to NULL in
+    every feature column."""
     import random
 
     import pyarrow as pa
@@ -106,7 +110,7 @@ def test_arrow_decoder_matches_row_functions():
     )
 
     rng = random.Random(42)
-    blobs: list[bytes] = [
+    blobs: list[bytes | None] = [
         b"",
         b"BMW dealers report record sales",
         b"P6 is a chess term",
@@ -118,12 +122,10 @@ def test_arrow_decoder_matches_row_functions():
     ]
     for _ in range(200):
         blobs.append(bytes(rng.randrange(256) for _ in range(rng.randrange(0, 64))))
+    with_nulls = list(blobs)
+    for i in (0, 4, 77, len(with_nulls) - 1):
+        with_nulls[i] = None
 
-    batch = pa.record_batch(
-        [pa.array(list(range(len(blobs))), type=pa.int64()),
-         pa.array(blobs, type=pa.binary())],
-        names=["doc_id", "blob"],
-    )
     # grab the generator the DataFrame API would ship
     captured = {}
 
@@ -133,15 +135,32 @@ def test_arrow_decoder_matches_row_functions():
             return None
 
     mm.decode_features(_FakeDF())
-    (out,) = list(captured["fn"](iter([batch])))
-    got = list(zip(
-        out.column("width").to_pylist(),
-        out.column("height").to_pylist(),
-        out.column("n_bytes").to_pylist(),
-        out.column("mean_byte").to_pylist(),
-        out.column("n_frames").to_pylist(),
-    ))
-    want = [tuple(mm._decode_blob(b)) for b in blobs]
-    assert out.column("doc_id").to_pylist() == list(range(len(blobs)))
-    for i, (g, w) in enumerate(zip(got, want)):
-        assert g == w, f"row {i}: arrow {g} != row-fn {w} (blob={blobs[i]!r})"
+
+    def check(batch, corpus, ids):
+        (out,) = list(captured["fn"](iter([batch])))
+        got = list(zip(
+            out.column("width").to_pylist(),
+            out.column("height").to_pylist(),
+            out.column("n_bytes").to_pylist(),
+            out.column("mean_byte").to_pylist(),
+            out.column("n_frames").to_pylist(),
+        ))
+        want = [
+            (None,) * 5 if b is None else tuple(mm._decode_blob(b))
+            for b in corpus
+        ]
+        assert out.column("doc_id").to_pylist() == ids
+        for i, (g, w) in enumerate(zip(got, want)):
+            assert g == w, f"row {i}: arrow {g} != row-fn {w} (blob={corpus[i]!r})"
+
+    for corpus in (blobs, with_nulls):
+        ids = list(range(len(corpus)))
+        for blob_type in (pa.binary(), pa.large_binary()):
+            batch = pa.record_batch(
+                [pa.array(ids, type=pa.int64()),
+                 pa.array(corpus, type=blob_type)],
+                names=["doc_id", "blob"],
+            )
+            check(batch, corpus, ids)
+            check(batch.slice(1), corpus[1:], ids[1:])
+            check(batch.slice(5, 60), corpus[5:65], ids[5:65])

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import os
 import sys
+from datetime import timedelta
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -86,7 +87,7 @@ def build(k: int, out_dir: str, src: str = None) -> None:
     s_vec = _stride(emb["vec_id"])
     ev_span = (
         pc.max(ev["ts"]).as_py() - pc.min(ev["ts"]).as_py()
-    ) // __import__("datetime").timedelta(microseconds=1)
+    ) // timedelta(microseconds=1)
 
     def tiles(t: pa.Table, shifts: dict, ts_shift: tuple = None):
         out = [t]
