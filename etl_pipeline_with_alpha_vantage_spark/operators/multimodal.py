@@ -260,7 +260,7 @@ def decode_features(blobs: DataFrame) -> DataFrame:
                 arr.offset : arr.offset + n + 1
             ].astype(np.int64)
             # Rebase onto this batch's byte window of the shared buffer.
-            lo, hi = int(offs[0]), int(offs[-1])
+            lo, hi = (int(offs[0]), int(offs[-1])) if len(offs) else (0, 0)
             offs -= lo
             dbuf = arr.buffers()[2]
             data = (
